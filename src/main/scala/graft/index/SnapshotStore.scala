@@ -175,8 +175,8 @@ object SnapshotStore {
     }
   }
 
-  /** Top-level {...} object slices of a JSON array/string (strings in our
-    * documents never contain unescaped braces — terms are tokenizer output).
+  /** Top-level {...} object slices of a JSON array/string; braces inside
+    * string values are skipped.
     */
   private def splitObjects(txt: String): Seq[String] = {
     val out = Seq.newBuilder[String]
@@ -222,20 +222,48 @@ object SnapshotStore {
     val m = ("\"" + name + "\":\"((?:[^\"\\\\]|\\\\.)*)\"").r.findFirstMatchIn(o)
     val raw = m.map(_.group(1)).getOrElse(
       throw new IllegalArgumentException(s"missing $name"))
-    raw.replace("\\\"", "\"").replace("\\\\", "\\")
-      .replace("\\n", "\n").replace("\\r", "\r").replace("\\t", "\t")
+    // one left-to-right pass: each escape is decoded exactly once, so an
+    // escaped backslash followed by 'n' stays two characters
+    val out = new StringBuilder(raw.length)
+    var i = 0
+    while (i < raw.length) {
+      val c = raw.charAt(i)
+      if (c != '\\') { out += c; i += 1 }
+      else {
+        raw.charAt(i + 1) match {
+          case 'n' => out += '\n'
+          case 'r' => out += '\r'
+          case 't' => out += '\t'
+          case 'b' => out += '\b'
+          case 'f' => out += '\f'
+          case 'u' =>
+            out += Integer.parseInt(raw.substring(i + 2, i + 6), 16).toChar
+            i += 4
+          case e => out += e // '"', '\\', '/'
+        }
+        i += 2
+      }
+    }
+    out.toString
   }
 
   private def arrField(o: String, name: String): String = {
     val idx = o.indexOf("\"" + name + "\":[")
     if (idx < 0) return ""
     val start = o.indexOf('[', idx)
-    // lineage is the last field; find matching bracket naively by depth
+    // matching bracket by depth, skipping string contents (as splitObjects)
     var depth = 0
+    var inStr = false
+    var esc = false
     var i = start
     while (i < o.length) {
       val c = o.charAt(i)
-      if (c == '[') depth += 1
+      if (inStr) {
+        if (esc) esc = false
+        else if (c == '\\') esc = true
+        else if (c == '"') inStr = false
+      } else if (c == '"') inStr = true
+      else if (c == '[') depth += 1
       else if (c == ']') { depth -= 1; if (depth == 0) return o.substring(start + 1, i) }
       i += 1
     }

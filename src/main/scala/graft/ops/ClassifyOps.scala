@@ -56,14 +56,9 @@ object ClassifyOps {
   /** Driver-residency cap for classifyKnn: at most this many test-doc
     * query specs are materialized on the driver at any moment. 10k specs
     * × O(100) distinct terms ≈ tens of MB — a constant, not a function of
-    * corpus size. Tests pin the observed max via [[lastKnnMaxBatch]].
+    * corpus size.
     */
   val KnnSpecBatch: Int = 10000
-
-  /** Largest spec batch the most recent classifyKnn call ever held on the
-    * driver (observability for the boundedness contract; test-asserted).
-    */
-  @volatile var lastKnnMaxBatch: Int = 0
 
   /** KNearestNeighborClassifier: each test doc becomes a disjunctive BM25
     * query of its distinct analyzed terms (the MLT-style query Lucene
@@ -182,7 +177,6 @@ object ClassifyOps {
       .agg(count(lit(1)).as("c"), round(sum("score"), 9).as("ssum"))
     val wVote = Window.partitionBy(col("qid"))
       .orderBy(col("c").desc, col("ssum").desc, col("lang").asc)
-    lastKnnMaxBatch = 0 // nothing is ever held on the driver
     votes.withColumn("rn", row_number().over(wVote))
       .where(col("rn") === 1)
       .select(col("qid").as("doc_id"), col("lang").as("pred_lang"))

@@ -100,10 +100,12 @@ object ClauseNode {
   *
   * Deliberate trade, documented for the plan audit: the tree evaluator
   * keeps leaf-level skipping (conjunction leapfrog, block-level advance)
-  * but not block-max WAND pruning — flat one-level queries keep running
-  * through QueryEngine.search's WAND path; arbitrarily nested trees pay
-  * full disjunction evaluation, exactly like Lucene's non-WAND
-  * BooleanScorer fallback for complex clauses.
+  * but not block-max WAND pruning. QueryEngine's one executor routes a
+  * tree of the flat one-level shape (QueryEngine.flatOf) to the BmwScorer
+  * WAND plan instead; only the other shapes (nested booleans, phrases,
+  * synonyms, expansions, boosted bools) run here and pay full disjunction
+  * evaluation, like Lucene's non-WAND BooleanScorer fallback for complex
+  * clauses.
   */
 object ClauseScorers {
   import BmwScorer.{NoMoreDocs, TermIterator}

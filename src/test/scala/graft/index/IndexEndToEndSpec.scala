@@ -10,6 +10,22 @@ import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.{Files, Paths}
 import scala.reflect.io.Directory
 
+/** Forwards to a real similarity and counts the docs it scores. */
+final class CountingSim(inner: graft.core.Similarity,
+    scored: org.apache.spark.util.LongAccumulator) extends graft.core.Similarity {
+  def weight(df: Long, docCount: Long, boost: Double): Double =
+    inner.weight(df, docCount, boost)
+  override def weightFull(df: Long, ttf: Long, docCount: Long, sumTtf: Long,
+      boost: Double): Double = inner.weightFull(df, ttf, docCount, sumTtf, boost)
+  def normTable(avgdl: Double): Array[Double] = inner.normTable(avgdl)
+  def score(weight: Double, tf: Int, normVal: Double): Double = {
+    scored.add(1L); inner.score(weight, tf, normVal)
+  }
+  def scoreFreq(weight: Double, freq: Double, normVal: Double): Double = {
+    scored.add(1L); inner.scoreFreq(weight, freq, normVal)
+  }
+}
+
 /** End-to-end suite (SURVEY.md §5.2 items 4-9): build a real index over the
   * deterministic synthetic corpus, then
   *   - rank-identity of the BMW engine vs the independent naive oracle on
@@ -693,14 +709,29 @@ class IndexEndToEndSpec extends AnyFunSuite {
       (QuerySpec("t5", should = Seq("func", "chan", "defer"), k = 20,
         minShouldMatch = 2),
         BoolNode(should = Seq(TermNode("func"), TermNode("chan"), TermNode("defer")),
-          minShouldMatch = 2)))
+          minShouldMatch = 2)),
+      // k above the filtered hit count: docs of the lang matching no term
+      // must not surface with score 0
+      (QuerySpec("t6", should = Seq("yield", "match"), langFilter = Some("scala"),
+        k = 1000),
+        BoolNode(must = Seq(BoolNode(should = Seq(TermNode("yield"), TermNode("match"))),
+          LangNode("scala")))))
+    // flat-shaped trees are routed to the WAND plan; one level down, as the
+    // sole MUST clause of a wrapper (which scores exactly its clause), the
+    // same tree stays on the exhaustive ClauseScorers plan
+    def exhaustive(tree: ClauseNode): ClauseNode = BoolNode(must = Seq(tree))
     for ((flat, tree) <- cases) {
+      assert(QueryEngine.treeOf(flat) == tree, s"${flat.qid}: treeOf")
       val viaWand = canon(QueryEngine.search(reader, Seq(flat)).collect())
       val viaTree = canon(QueryEngine.searchTree(reader, flat.qid, tree, flat.k).collect())
       assert(viaTree == viaWand, s"${flat.qid}: tree != WAND")
+      val viaScorers = canon(QueryEngine.searchTree(reader, flat.qid,
+        exhaustive(tree), flat.k).collect())
+      assert(viaScorers.nonEmpty && viaScorers == viaWand,
+        s"${flat.qid}: exhaustive tree != WAND")
     }
 
-    // BATCHED: all 5 trees through ONE searchTrees call (one shared scan)
+    // BATCHED: all 6 trees through ONE searchTrees call (one shared scan)
     // must equal the per-tree runs exactly
     val batch = cases.map { case (flat, tree) => TreeQuery(flat.qid, tree, flat.k) }
     val batched = QueryEngine.searchTrees(reader, batch).collect()
@@ -724,9 +755,46 @@ class IndexEndToEndSpec extends AnyFunSuite {
       graft.search.ReferenceQueries.all.filter(_.dismaxTiebreak.isEmpty))
       .collect().groupBy(_.qid).map { case (q, hits) => q -> canon(hits) }
       .withDefaultValue(Seq.empty)
-    for (q <- refTrees)
+    val refExhaustive = QueryEngine.searchTrees(reader,
+      refTrees.map(t => t.copy(root = exhaustive(t.root)))).collect()
+      .groupBy(_.qid).map { case (q, hits) => q -> canon(hits) }
+      .withDefaultValue(Seq.empty)
+    for (q <- refTrees) {
       assert(refBatched(q.qid) == refWand(q.qid),
         s"${q.qid}: batched treeOf != WAND")
+      assert(refExhaustive(q.qid) == refWand(q.qid),
+        s"${q.qid}: exhaustive treeOf != WAND")
+    }
+  }
+
+  test("routing: a flat-shaped tree scores exactly the docs its spec scores") {
+    import spark.implicits._
+    import graft.search.ClauseNode._
+    // one corpus partition == one docId bucket == one scoring task, so how
+    // far WAND prunes does not depend on theta shared by sibling tasks
+    CorpusGen.ensure(spark, s"$workDir/corpus_one_bucket", 600, numPartitions = 1)
+    val dir = s"$workDir/index_one_bucket"
+    Index.build(spark.read.parquet(s"$workDir/corpus_one_bucket/corpus.parquet")
+      .as[SourceDoc], dir, IndexConfig())
+    val reader = Index.reader(spark, dir)
+    val scored = spark.sparkContext.longAccumulator("docs_scored")
+    val sim = new CountingSim(graft.core.Bm25(), scored)
+    def run(hits: => Array[ScoredDoc]): (Seq[(Long, Double)], Long) = {
+      scored.reset()
+      (hits.toSeq.map(h => (h.docId, h.score)).sortBy(h => (-h._2, h._1)), scored.value)
+    }
+    val q = QuerySpec("w", should = Seq("return", "class", "import"),
+      mustNot = Seq("catch"), k = 5)
+    val tree = BoolNode(should = Seq(TermNode("return"), TermNode("class"),
+      TermNode("import")), mustNot = Seq(TermNode("catch")))
+    val (flatHits, flatScored) = run(QueryEngine.search(reader, Seq(q), sim).collect())
+    val (treeHits, treeScored) =
+      run(QueryEngine.searchTree(reader, "w", tree, q.k, sim).collect())
+    val sumDf = reader.termStatsMap(q.should).values.map(_._1).sum
+    assert(flatHits.size == q.k && treeHits == flatHits)
+    assert(flatScored < sumDf, s"WAND scored $flatScored of $sumDf postings")
+    assert(treeScored == flatScored,
+      s"tree scored $treeScored docs, its flat spec $flatScored")
   }
 
   test("clause tree at k=200k: distributed merge is rank-identical to the driver collect") {

