@@ -3,6 +3,8 @@ package graft.index
 import graft._
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import com.fasterxml.jackson.databind.json.JsonMapper
+import com.fasterxml.jackson.module.scala.DefaultScalaModule
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import scala.jdk.CollectionConverters._
 
@@ -22,8 +24,7 @@ case class SnapshotMeta(
     lineage: Seq[PartitionLineage],
     /** Largest committed docId in this snapshot, carried in the manifest so
       * append paths derive their docPartition base from METADATA instead of
-      * an agg job over every snapshot's docmeta. -1 = unknown (pre-r6
-      * manifest or empty increment) — readers fall back to the agg.
+      * an agg job over every snapshot's docmeta. -1 = empty increment.
       */
     maxDocId: Long = -1L) {
   /** Slim term dictionary (term, df, ttf, slices) written next to postings
@@ -34,13 +35,20 @@ case class SnapshotMeta(
   def termDictDir: String = postingsDir.stripSuffix("/postings") + "/termdict"
 }
 
-/** Layout under indexDir:
+/** Layout under indexDir, format [[SnapshotStore.FormatVersion]]:
   *   inc=K/segments/   flush output (SegRow parquet, PARTITIONED BY kind:
   *                     kind=0 doc metadata, kind=1 partial postings — the
   *                     kind=0 partition IS the committed docmeta, no copy)
   *                     + _SEG_DONE marker
-  *   inc=K/postings/   merged TermPostings parquet
-  *   snapshots.json    committed snapshot list (atomic rename publish)
+  *   inc=K/postings/   merged TermPostings parquet, PARTITIONED BY bucket
+  *   inc=K/termdict/   slim term dictionary parquet
+  *   tombstones_vG/    delete generations; `tombstones.current` holds the
+  *                     live range as "cur base"
+  *   snapshots.json    {"formatVersion": N, "snapshots": [SnapshotMeta...]}
+  *
+  * One format at a time: [[SnapshotStore.read]] rejects a manifest of any
+  * other shape or version, so an index written by another build is rebuilt,
+  * never read through compatibility shims.
   *
   * Two-phase commit mirror of IndexWriter.prepareCommit/commit
   * [B lucene/core/src/java/org/apache/lucene/index/SegmentInfos.java]:
@@ -50,34 +58,6 @@ case class SnapshotMeta(
   * redoes only the merge (idempotent overwrite).
   */
 object SnapshotStore {
-
-  /** Back-compat shims for indexes written before the offsets channel:
-    * parquet lacking `offBytes` decodes with the 1-byte "offsets off"
-    * sentinel injected, so pre-offsets snapshots/segments stay readable
-    * (the same contract Lucene keeps across codec minor versions).
-    */
-  private[index] def withPartialOffBytes(df: org.apache.spark.sql.DataFrame)
-      : org.apache.spark.sql.DataFrame =
-    if (df.schema.fieldNames.contains("offBytes")) df
-    else df.withColumn("offBytes", org.apache.spark.sql.functions.expr("unhex('00')"))
-
-  private[index] def withBlockOffBytes(df: org.apache.spark.sql.DataFrame)
-      : org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.types.{ArrayType, StructType}
-    val hasOff = df.schema("blocks").dataType match {
-      case ArrayType(st: StructType, _) => st.fieldNames.contains("offBytes")
-      case _ => true
-    }
-    if (hasOff) df
-    else df.withColumn("blocks", org.apache.spark.sql.functions.expr(
-      "transform(blocks, b -> named_struct(" +
-        "'firstDocId', b.firstDocId, 'lastDocId', b.lastDocId, " +
-        "'count', b.count, 'impactCount', b.impactCount, " +
-        "'impactTfBytes', b.impactTfBytes, 'impactNormBytes', b.impactNormBytes, " +
-        "'docIdBytes', b.docIdBytes, 'tfBytes', b.tfBytes, " +
-        "'normBytes', b.normBytes, 'posBytes', b.posBytes, " +
-        "'offBytes', unhex('00')))"))
-  }
 
   /** Directory-partition bucket of a term: its first [a-z0-9] char, or
     * 'x' for anything else (field-prefixed dictionary entries start with
@@ -109,165 +89,42 @@ object SnapshotStore {
     */
   val SuggestMaxGram = 20
 
-  // -- tiny hand-rolled JSON (no extra deps in the sandbox) --
+  /** Version of the on-disk index format: the manifest shape, the segment
+    * and postings parquet schemas, the `bucket=` layout and the tombstone
+    * pointer. Bump it on any change to them. [[read]] rejects every other
+    * version, and the derived indexes of graft.ops name their cache dirs
+    * after it, so a build never reads an index of another format.
+    */
+  val FormatVersion: Int = 1
 
-  private def jstr(s: String): String =
-    "\"" + s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
+  /** `snapshots.json`: Iceberg's table-metadata shape, a format version
+    * next to the snapshot list.
+    */
+  private case class Manifest(formatVersion: Int, snapshots: Seq[SnapshotMeta])
 
-  private def lineageJson(l: PartitionLineage): String =
-    s"""{"snapshotId":${l.snapshotId},"stage":${jstr(l.stage)},"partitionId":${l.partitionId},""" +
-      s""""termLo":${jstr(l.termLo)},"termHi":${jstr(l.termHi)},"postingsBytes":${l.postingsBytes},""" +
-      s""""docCount":${l.docCount},"termCount":${l.termCount},"wallMillis":${l.wallMillis}}"""
-
-  private def snapshotJson(s: SnapshotMeta): String =
-    s"""{"snapshotId":${s.snapshotId},"parentId":${s.parentId},"incrementId":${s.incrementId},""" +
-      s""""docCount":${s.docCount},"sumTotalTermFreq":${s.sumTotalTermFreq},""" +
-      s""""maxDocId":${s.maxDocId},""" +
-      s""""postingsDir":${jstr(s.postingsDir)},"docMetaDir":${jstr(s.docMetaDir)},""" +
-      s""""lineage":[${s.lineage.map(lineageJson).mkString(",")}]}"""
+  private val mapper: JsonMapper =
+    JsonMapper.builder().addModule(DefaultScalaModule).build()
 
   def write(indexDir: String, snapshots: Seq[SnapshotMeta]): Unit = {
     val dir = Paths.get(indexDir)
     Files.createDirectories(dir)
     val tmp = dir.resolve("snapshots.json.tmp")
     val dst = dir.resolve("snapshots.json")
-    Files.writeString(tmp, snapshots.map(snapshotJson).mkString("[", ",\n", "]"))
+    mapper.writeValue(tmp.toFile, Manifest(FormatVersion, snapshots))
     Files.move(tmp, dst, StandardCopyOption.ATOMIC_MOVE,
       StandardCopyOption.REPLACE_EXISTING)
   }
 
-  // minimal JSON reader for exactly the shape we write
+  /** The committed snapshot list, Nil when `indexDir` has no manifest. */
   def read(indexDir: String): Seq[SnapshotMeta] = {
     val p = Paths.get(indexDir, "snapshots.json")
     if (!Files.exists(p)) return Nil
-    val txt = Files.readString(p)
-    parseSnapshots(txt)
-  }
-
-  private[index] def parseSnapshots(txt: String): Seq[SnapshotMeta] = {
-    // split into top-level snapshot objects
-    val objs = splitObjects(txt)
-    objs.map { o =>
-      SnapshotMeta(
-        snapshotId = longField(o, "snapshotId"),
-        parentId = longField(o, "parentId"),
-        incrementId = longField(o, "incrementId").toInt,
-        docCount = longField(o, "docCount"),
-        sumTotalTermFreq = longField(o, "sumTotalTermFreq"),
-        maxDocId = longFieldOpt(o, "maxDocId", -1L),
-        postingsDir = strField(o, "postingsDir"),
-        docMetaDir = strField(o, "docMetaDir"),
-        lineage = splitObjects(arrField(o, "lineage")).map { l =>
-          PartitionLineage(longField(l, "snapshotId"), strField(l, "stage"),
-            longField(l, "partitionId").toInt, strField(l, "termLo"),
-            strField(l, "termHi"), longField(l, "postingsBytes"),
-            longField(l, "docCount"), longField(l, "termCount"),
-            longField(l, "wallMillis"))
-        })
-    }
-  }
-
-  /** Top-level {...} object slices of a JSON array/string; braces inside
-    * string values are skipped.
-    */
-  private def splitObjects(txt: String): Seq[String] = {
-    val out = Seq.newBuilder[String]
-    var depth = 0
-    var start = -1
-    var inStr = false
-    var esc = false
-    var i = 0
-    while (i < txt.length) {
-      val c = txt.charAt(i)
-      if (inStr) {
-        if (esc) esc = false
-        else if (c == '\\') esc = true
-        else if (c == '"') inStr = false
-      } else c match {
-        case '"' => inStr = true
-        case '{' => if (depth == 0) start = i; depth += 1
-        case '}' =>
-          depth -= 1
-          if (depth == 0) { out += txt.substring(start, i + 1); start = -1 }
-        case _ =>
-      }
-      i += 1
-    }
-    out.result()
-  }
-
-  private def longField(o: String, name: String): Long = {
-    val m = ("\"" + name + "\":(-?\\d+)").r.findFirstMatchIn(o)
-    m.map(_.group(1).toLong).getOrElse(
-      throw new IllegalArgumentException(s"missing $name in $o"))
-  }
-
-  /** Like [[longField]] but `default` when absent (fields added after r5 —
-    * pre-existing manifests stay readable).
-    */
-  private def longFieldOpt(o: String, name: String, default: Long): Long = {
-    val m = ("\"" + name + "\":(-?\\d+)").r.findFirstMatchIn(o)
-    m.map(_.group(1).toLong).getOrElse(default)
-  }
-
-  private def strField(o: String, name: String): String = {
-    val m = ("\"" + name + "\":\"((?:[^\"\\\\]|\\\\.)*)\"").r.findFirstMatchIn(o)
-    val raw = m.map(_.group(1)).getOrElse(
-      throw new IllegalArgumentException(s"missing $name"))
-    // one left-to-right pass: each escape is decoded exactly once, so an
-    // escaped backslash followed by 'n' stays two characters
-    val out = new StringBuilder(raw.length)
-    var i = 0
-    while (i < raw.length) {
-      val c = raw.charAt(i)
-      if (c != '\\') { out += c; i += 1 }
-      else {
-        raw.charAt(i + 1) match {
-          case 'n' => out += '\n'
-          case 'r' => out += '\r'
-          case 't' => out += '\t'
-          case 'b' => out += '\b'
-          case 'f' => out += '\f'
-          case 'u' =>
-            out += Integer.parseInt(raw.substring(i + 2, i + 6), 16).toChar
-            i += 4
-          case e => out += e // '"', '\\', '/'
-        }
-        i += 2
-      }
-    }
-    out.toString
-  }
-
-  private def arrField(o: String, name: String): String = {
-    val idx = o.indexOf("\"" + name + "\":[")
-    if (idx < 0) return ""
-    val start = o.indexOf('[', idx)
-    // matching bracket by depth, skipping string contents (as splitObjects)
-    var depth = 0
-    var inStr = false
-    var esc = false
-    var i = start
-    while (i < o.length) {
-      val c = o.charAt(i)
-      if (inStr) {
-        if (esc) esc = false
-        else if (c == '\\') esc = true
-        else if (c == '"') inStr = false
-      } else if (c == '"') inStr = true
-      else if (c == '[') depth += 1
-      else if (c == ']') { depth -= 1; if (depth == 0) return o.substring(start + 1, i) }
-      i += 1
-    }
-    ""
+    val tree = mapper.readTree(p.toFile)
+    val found = Option(tree.get("formatVersion")).filter(_.isInt).map(_.intValue)
+    require(tree.isObject && found.contains(FormatVersion),
+      s"$indexDir has index format ${found.getOrElse("(unversioned)")}; " +
+        s"this build reads format $FormatVersion only — rebuild the index")
+    mapper.treeToValue(tree, classOf[Manifest]).snapshots
   }
 }
 
@@ -340,7 +197,7 @@ object Index {
       // a base index built from a >4096-partition scan occupies docPartition
       // ids that batchId*span would alias — refuse rather than silently
       // merge two different documents under one docId
-      val maxPart = maxDocPartition(batch.sparkSession, snaps.toSeq)
+      val maxPart = maxDocPartition(snaps.toSeq)
       require(batchId * BatchPartitionSpan > maxPart,
         s"batch $batchId would reuse docPartition ids <= $maxPart already " +
           s"committed in $indexDir; use batchId > ${maxPart / BatchPartitionSpan}")
@@ -352,32 +209,13 @@ object Index {
     snaps.toSeq
   }
 
-  /** Largest docPartition referenced by any committed docId (-1 if none):
-    * a docmeta-column agg, used to keep append docId spaces disjoint.
+  /** Largest docPartition referenced by any committed docId (-1 if none),
+    * from the manifest's per-snapshot max docId — no Spark job. Used to
+    * keep append docId spaces disjoint.
     */
-  private def maxDocPartition(spark: SparkSession,
-      snaps: Seq[SnapshotMeta]): Int = {
-    import spark.implicits._
-    val live = snaps.filter(_.docCount > 0)
-    if (snaps.isEmpty || live.isEmpty) -1
-    // manifest-carried max docId (r6): no Spark job when every non-empty
-    // snapshot recorded one; pre-r6 manifests fall back to the agg
-    else if (live.forall(_.maxDocId >= 0))
-      CorpusIds.partitionOf(live.map(_.maxDocId).max)
-    else readDocMeta(spark, snaps.map(_.docMetaDir))
-      .agg(max($"docId")).as[Option[Long]].head()
+  private def maxDocPartition(snaps: Seq[SnapshotMeta]): Int =
+    snaps.filter(_.docCount > 0).map(_.maxDocId).maxOption
       .map(CorpusIds.partitionOf).getOrElse(-1)
-  }
-
-  /** Doc metadata as a flat frame, whichever layout the snapshot carries:
-    * the segments' kind=0 partition (meta struct column, current) or a flat
-    * docmeta copy (pre-r3 indexes). An index's snapshots share one layout.
-    */
-  private[index] def readDocMeta(spark: SparkSession,
-      dirs: Seq[String]): DataFrame = {
-    val df = spark.read.parquet(dirs: _*)
-    if (df.columns.contains("meta")) df.select("meta.*") else df
-  }
 
   private def commitIncrement(slice: Dataset[SourceDoc], indexDir: String,
       inc: Int, basePartition: Int, cfg: IndexConfig,
@@ -432,7 +270,7 @@ object Index {
 
     val seg = spark.read.parquet(segDir)
     val docMeta = seg.where($"kind" === 0).select($"meta.*").as[DocMeta]
-    val partials = SnapshotStore.withPartialOffBytes(seg.where($"kind" === 1).select($"partial.*")).as[PartialPostings]
+    val partials = seg.where($"kind" === 1).select($"partial.*").as[PartialPostings]
     mergeAndCommit(docMeta, partials, incDir, inc, cfg, prior, numPartsHint,
       docMetaDir = s"$segDir/kind=0", flushed = flushed)
   }
@@ -553,8 +391,8 @@ object Index {
       .parquet(s"$incDir/postings")
     // an EMPTY merge (e.g. compacting after every doc was tombstoned)
     // leaves a partitionBy write with zero files — unreadable (no schema).
-    // Write one empty schema-bearing file so the index stays openable,
-    // the same guard ensureKindDirs provides for segments.
+    // Write one empty schema-bearing file, `bucket` included, so the index
+    // stays openable: the same guard ensureKindDirs provides for segments.
     val hasBucketDirs = {
       val s = Files.list(Paths.get(s"$incDir/postings"))
       try s.iterator().asScala
@@ -562,8 +400,8 @@ object Index {
       finally s.close() // ADVICE r5: the unclosed stream leaked an fd per merge
     }
     if (!hasBucketDirs) {
-      val inner = org.apache.spark.sql.types.StructType(
-        org.apache.spark.sql.Encoders.product[TermPostings].schema)
+      val inner = org.apache.spark.sql.Encoders.product[TermPostings].schema
+        .add("bucket", org.apache.spark.sql.types.StringType)
       spark.createDataFrame(
           spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], inner)
         .repartition(1).write.mode("overwrite").parquet(s"$incDir/postings")
@@ -689,7 +527,7 @@ object Index {
     // conflicting directory structures)
     val seg = segDirs.map(d => spark.read.parquet(d)).reduce(_ unionByName _)
     val allMeta = seg.where($"kind" === 0).select($"meta.*").as[DocMeta]
-    val allPartials = SnapshotStore.withPartialOffBytes(seg.where($"kind" === 1).select($"partial.*")).as[PartialPostings]
+    val allPartials = seg.where($"kind" === 1).select($"partial.*").as[PartialPostings]
     val nTomb = if (r.hasTombstones) r.tombstones.count() else 0L
 
     val (docMeta, partials) =
@@ -739,7 +577,7 @@ object Index {
 
     val segBack = spark.read.parquet(s"$outDir/inc=0/segments")
     val dm = segBack.where($"kind" === 0).select($"meta.*").as[DocMeta]
-    val pp = SnapshotStore.withPartialOffBytes(segBack.where($"kind" === 1).select($"partial.*")).as[PartialPostings]
+    val pp = segBack.where($"kind" === 1).select($"partial.*").as[PartialPostings]
     val snap = mergeAndCommit(dm, pp, s"$outDir/inc=0", 0, cfg, Nil,
       numPartsHint = -1, docMetaDir = s"$outDir/inc=0/segments/kind=0")
     SnapshotStore.write(outDir, Seq(snap))
@@ -821,15 +659,12 @@ object Index {
   }
 
   /** (base, current) live tombstone generation range; (1, 0) = none.
-    * Pointer format "cur base"; a bare "cur" (pre-delta layout) means the
-    * single dir v{cur} holds the full set — base = cur.
+    * Pointer format "cur base".
     */
   private[index] def tombstoneGens(indexDir: String): (Int, Int) = {
     val ptr = Paths.get(indexDir, "tombstones.current")
     if (!Files.exists(ptr)) return (1, 0)
-    val parts = Files.readString(ptr).trim.split("\\s+")
-    val cur = parts(0).toInt
-    val base = if (parts.length > 1) parts(1).toInt else cur
+    val Array(cur, base) = Files.readString(ptr).trim.split(" ").map(_.toInt)
     (base, cur)
   }
 
@@ -850,7 +685,7 @@ object Index {
     // docPartition (a wide base build occupies low batchId ranges)
     val nextInc = math.max(
       snaps.map(_.incrementId).max + 1,
-      maxDocPartition(spark, snaps) / BatchPartitionSpan + 1)
+      maxDocPartition(snaps) / BatchPartitionSpan + 1)
     appendBatch(newDocs, indexDir, nextInc.toLong, cfg)
   }
 
@@ -920,27 +755,15 @@ object Index {
         val tmp = Paths.get(dstDir, srcInc.getFileName.toString + ".copytmp")
         deleteRecursively(tmp)
         copyTree(Paths.get(s.postingsDir), tmp.resolve("postings"))
-        val td = Paths.get(s.termDictDir)
-        if (Files.exists(td)) copyTree(td, tmp.resolve("termdict"))
+        copyTree(Paths.get(s.termDictDir), tmp.resolve("termdict"))
         // the WHOLE segments tree, not just the kind=0 docmeta partition:
         // kind=1 holds the flush partials compact() re-merges, so a clone
         // without them would be readable but silently compact to an EMPTY
         // index (found by the expungeDeletes entry; compact now also
         // guards). Lucene's backup copies every segment file for the same
         // reason.
-        val segs = srcInc.resolve("segments")
-        if (Files.exists(segs)) copyTree(segs, tmp.resolve("segments"))
-        val dm = Paths.get(s.docMetaDir)
-        // docMetaDir normally lives under segments/ (covered above); copy
-        // it explicitly in case a snapshot points elsewhere
-        if (!dm.startsWith(segs)) {
-          copyTree(dm, tmp.resolve(srcInc.relativize(dm).toString))
-        }
-        val done = srcInc.resolve("_SEG_DONE")
-        if (Files.exists(done)) {
-          Files.copy(done, tmp.resolve("_SEG_DONE"),
-            StandardCopyOption.REPLACE_EXISTING)
-        }
+        copyTree(srcInc.resolve("segments"), tmp.resolve("segments"))
+        Files.copy(srcInc.resolve("_SEG_DONE"), tmp.resolve("_SEG_DONE"))
         Files.move(tmp, dstInc, StandardCopyOption.ATOMIC_MOVE)
       }
     }
@@ -999,10 +822,7 @@ object Index {
     } finally walk.close()
   }
 
-  private[index] def currentTombstoneGen(indexDir: String): Int =
-    tombstoneGens(indexDir)._2
-
-  private def deleteRecursively(p: Path): Unit = {
+  private[graft] def deleteRecursively(p: Path): Unit = {
     if (Files.exists(p)) {
       Files.walk(p).sorted(java.util.Comparator.reverseOrder[Path]())
         .forEach(f => Files.delete(f))
@@ -1018,10 +838,10 @@ object Index {
       snapshots.map(_.docCount).sum,
       snapshots.map(_.sumTotalTermFreq).sum)
 
-    /** One normalized postings frame per snapshot: bucket column present
-      * (computed on the fly for pre-bucket snapshots — no pruning there,
-      * but the union stays homogeneous) and offBytes back-filled. Each
-      * snapshot dir is read as its own root, so `bucket=` partition
+    /** One postings frame per snapshot, with its string `bucket` column
+      * (an empty merge writes `bucket` as a data column instead of
+      * directories, so every frame has it). Each snapshot dir is read as
+      * its own root, so `bucket=` partition
       * discovery never fights the `inc=K` path segment above it. CACHED
       * on the reader: the DataFrame holds its InMemoryFileIndex, so the
       * bucket-directory listing (37 x mergeParts files) is paid once per
@@ -1030,15 +850,11 @@ object Index {
       */
     private lazy val postingsFrames: Seq[DataFrame] =
       snapshots.map { m =>
-        val df = spark.read.parquet(m.postingsDir)
-        val withBucket =
-          if (df.schema.fieldNames.contains("bucket"))
-            // pin the inferred partition-column type: an all-digit-bucket
-            // index infers IntegerType and the string isin()/unionByName
-            // downstream would lean on implicit widening (ADVICE r5)
-            df.withColumn("bucket", col("bucket").cast("string"))
-          else df.withColumn("bucket", SnapshotStore.bucketCol(col("term")))
-        SnapshotStore.withBlockOffBytes(withBucket)
+        // pin the inferred partition-column type: an all-digit-bucket
+        // index infers IntegerType and the string isin()/unionByName
+        // downstream would lean on implicit widening (ADVICE r5)
+        spark.read.parquet(m.postingsDir)
+          .withColumn("bucket", col("bucket").cast("string"))
       }
 
     def postings: Dataset[TermPostings] = {
@@ -1064,7 +880,7 @@ object Index {
 
     def docMeta: Dataset[DocMeta] = {
       import spark.implicits._
-      Index.readDocMeta(spark, snapshots.map(_.docMetaDir)).as[DocMeta]
+      spark.read.parquet(snapshots.map(_.docMetaDir): _*).select("meta.*").as[DocMeta]
     }
 
     /** Slim term dictionary (term, df, ttf, slices) — one row per term per

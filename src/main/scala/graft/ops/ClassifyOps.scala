@@ -23,35 +23,15 @@ import org.apache.spark.sql.expressions.Window
   */
 object ClassifyOps {
 
-  private val Version = "v2" // v2: offsets-capable posting schema
-  private val trainCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Index.Reader]()
-
   /** Index over the TRAIN split only — the classifier's search space
     * (Lucene trains a classifier on an index of labeled docs; the held-out
     * docs must not be their own nearest neighbours). Same analyzer/config
     * as the main documents index.
     */
   def trainReader(spark: SparkSession, sfDir: String): Index.Reader =
-    trainCache.computeIfAbsent(sfDir, _ => {
-      import spark.implicits._
-      val safe = sfDir.replaceAll("[^A-Za-z0-9._-]", "_")
-      val dir = s"${sys.props("java.io.tmpdir")}/graft_trainindex_${Version}_$safe"
-      if (index.SnapshotStore.read(dir).isEmpty) {
-        val corpus = spark.read.parquet(s"$sfDir/documents.parquet")
-          .where(col("doc_id") % 10 =!= 0)
-          .select(
-            col("source").as("repo"),
-            col("doc_id").cast("string").as("path"),
-            lit("").as("commit"),
-            col("lang"),
-            col("text").as("content"))
-          .as[SourceDoc]
-        Index.build(corpus, dir,
-          IndexConfig(hotTermDf = 20000, targetPostingsPerSlice = 20000))
-      }
-      Index.reader(spark, dir)
-    })
+    DocSearchOps.derivedIndex(spark, sfDir, "trainindex",
+      IndexConfig(hotTermDf = 20000, targetPostingsPerSlice = 20000),
+      rows = col("doc_id") % 10 =!= 0)
 
   /** Driver-residency cap for classifyKnn: at most this many test-doc
     * query specs are materialized on the driver at any moment. 10k specs

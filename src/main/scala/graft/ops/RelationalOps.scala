@@ -131,42 +131,38 @@ object RelationalOps {
     // single-task sort.
     val parts = spark.sessionState.conf.numShufflePartitions
     // partition-local ordinal WITHOUT a second shuffle: after the range
-    // partition + local sort, monotonically_increasing_id() is
-    // pid << 33 | row-seq with row-seq following the sorted order — the
-    // first r6 shape used row_number() over a pid window, which forced a
-    // second full-table Exchange (range partitioning does not satisfy a
-    // hash-by-pid window) and a numShufflePartitions-branch coalesce/when
-    // offset expression whose codegen dominated the entry's first run.
-    // A partition would need >2^33 rows to overflow the local counter.
-    val LocalBits = 33
+    // partition + local sort, monotonically_increasing_id() counts up in
+    // the sorted order within each partition, so a row's ordinal is its id
+    // minus its partition's smallest id. The first r6 shape used
+    // row_number() over a pid window, which forced a second full-table
+    // Exchange (range partitioning does not satisfy a hash-by-pid window).
     val ranged = t(spark, sfDir, "lineitem")
       .select(col("l_extendedprice"),
         (col("l_orderkey") * lit(10000L) + col("l_linenumber")).as("rid"))
       .repartitionByRange(parts, asc("l_extendedprice"), asc("rid"))
       .sortWithinPartitions(asc("l_extendedprice"), asc("rid"))
+      .withColumn("pid", spark_partition_id())
       .withColumn("mid", monotonically_increasing_id())
       .persist()
-    // cumulative offsets via a partition-count-sized driver collect + a
-    // tiny broadcast join (an in-plan variant computing offsets/thresholds
-    // through a bounded window measured slower to plan: 4.40 vs 4.01 s
-    // first-run — two small queries beat one bigger one here)
-    val cnts = ranged
-      .groupBy(shiftright(col("mid"), LocalBits).cast("int").as("pid"))
-      .agg(count(lit(1)).as("c"))
-      .collect().map(r => r.getInt(0) -> r.getLong(1)).sortBy(_._1)
+    // per-partition counts and first ids, then cumulative offsets, via a
+    // partition-count-sized driver collect + a tiny broadcast join (an
+    // in-plan variant computing offsets/thresholds through a bounded window
+    // measured slower to plan: 4.40 vs 4.01 s first-run — two small
+    // queries beat one bigger one here)
+    val cnts = ranged.groupBy(col("pid"))
+      .agg(count(lit(1)).as("c"), min(col("mid")).as("m0"))
+      .collect().map(r => (r.getInt(0), r.getLong(1), r.getLong(2))).sortBy(_._1)
     val n = cnts.map(_._2).sum
     val offsets = cnts.scanLeft(0L)(_ + _._2).dropRight(1)
     import spark.implicits._
-    val offDf = broadcast(
-      cnts.map(_._1).zip(offsets).toSeq.toDF("pid", "off"))
+    val offDf = broadcast(cnts.zip(offsets)
+      .map { case ((pid, _, m0), off) => (pid, m0, off) }.toSeq.toDF("pid", "m0", "off"))
     val q = n / nBuckets
     val r = n % nBuckets
     val thresh = r * (q + 1)
     ranged
-      .withColumn("pid", shiftright(col("mid"), LocalBits).cast("int"))
       .join(offDf, Seq("pid"))
-      .withColumn("i",
-        col("off") + col("mid").bitwiseAND(lit((1L << LocalBits) - 1)) + 1)
+      .withColumn("i", col("off") + col("mid") - col("m0") + 1)
       // integer `div`, not `/`: SQL division on longs is double-valued and
       // loses exactness past 2^53 global ranks
       .withColumn("bucket",

@@ -339,6 +339,17 @@ class IndexEndToEndSpec extends AnyFunSuite {
     assert(rc.stats.docCount > 0 && rc.stats.docCount ==
       Index.reader(spark, rest3).stats.docCount -
         Index.reader(spark, rest3).tombstones.distinct().count())
+
+    // a tailing replica pulls only the commit points it lacks: the base
+    // build, then only the appended increment
+    val leader = s"$workDir/index_repl_leader"
+    val follower = s"$workDir/index_repl_follower"
+    Index.build(corpus, leader, cfg)
+    assert(Index.replicate(leader, follower)._2 == 1)
+    Index.appendBatch(corpus.limit(50), leader, 1L, cfg)
+    val (pulled, n2) = Index.replicate(leader, follower)
+    assert(n2 == 1, s"second pull copied $n2 increments, want only the appended one")
+    assert(pulled.map(_.incrementId) == Seq(0, 1))
   }
 
   test("duplicate MUST clauses do not mask a missing required term") {

@@ -7,7 +7,8 @@ import java.nio.file.Files
 
 /** The snapshots.json manifest codec, without Spark: whatever strings a
   * manifest carries (paths, stage names, field-prefixed lineage terms)
-  * read back exactly as written.
+  * read back exactly as written, and a manifest of any other format is
+  * rejected.
   */
 class SnapshotStoreSpec extends AnyFunSuite {
 
@@ -55,5 +56,27 @@ class SnapshotStoreSpec extends AnyFunSuite {
         0L, 0L, 0L, 0L))))
     SnapshotStore.write(dir, snaps)
     assert(SnapshotStore.read(dir) == snaps)
+  }
+
+  test("manifest format: writes its version, rejects other shapes and versions") {
+    val dir = Files.createTempDirectory("graft_manifest").toString
+    val manifest = java.nio.file.Paths.get(dir, "snapshots.json")
+    SnapshotStore.write(dir, Seq(SnapshotMeta(1L, 0L, 0, 1L, 1L, "p", "d", Nil)))
+    val written = Files.readString(manifest)
+    assert(written.contains("\"formatVersion\""), written)
+
+    def rejected(json: String): String = {
+      Files.writeString(manifest, json)
+      intercept[IllegalArgumentException](SnapshotStore.read(dir)).getMessage
+    }
+    // the unversioned bare-array shape of earlier builds
+    val bare = rejected("""[{"snapshotId":1,"parentId":0,"incrementId":0,""" +
+      """"docCount":1,"sumTotalTermFreq":1,"postingsDir":"p","docMetaDir":"d",""" +
+      """"lineage":[]}]""")
+    assert(bare.contains(dir), bare)
+    val next = SnapshotStore.FormatVersion + 1
+    val newer = rejected(written.replace(
+      s""""formatVersion":${SnapshotStore.FormatVersion}""", s""""formatVersion":$next"""))
+    assert(newer.contains(dir) && newer.contains(next.toString), newer)
   }
 }
