@@ -20,7 +20,10 @@ import org.apache.spark.sql.functions._
   *   3. content-field totalTf == sum(docMeta.tokenCount);
   *   4. every tombstoned docId exists in docMeta (deletes are logical
   *      until compaction);
-  *   5. docId partitions are disjoint across snapshots (docCount sums).
+  *   5. docId partitions are disjoint across snapshots (docCount sums);
+  *   6. the reader's in-heap term table (`termStatsMap`) == the termdict
+  *      aggregate for every term (a dictionary-sized collect: the table
+  *      itself is driver-resident).
   *
   * usage: CheckIndexApp <indexDir>
   */
@@ -110,6 +113,15 @@ object CheckIndexApp {
       bad += 1
       println(s"[graft-checkindex] FAIL doc counts: manifest ${r.stats.docCount} != docmeta $metaDocs")
     } else println(s"[graft-checkindex] OK  doc counts (${r.stats.docCount} across ${r.snapshots.size} snapshot(s))")
+
+    // 6. in-heap term stats <-> termdict aggregate
+    val dict = dAgg.as[(String, Long, Long)].collect()
+    val heap = r.termStatsMap(dict.map(_._1).toSeq)
+    val heapBad = dict.count { case (t, df, ttf) => heap(t) != ((df, ttf)) }
+    if (heapBad > 0) {
+      bad += heapBad
+      println(s"[graft-checkindex] FAIL term stats: $heapBad term(s) differ from the termdict aggregate")
+    } else println(s"[graft-checkindex] OK  term stats == termdict aggregate (${dict.length} terms)")
 
     println(if (bad == 0) "[graft-checkindex] RESULT: clean"
       else s"[graft-checkindex] RESULT: $bad problem(s)")

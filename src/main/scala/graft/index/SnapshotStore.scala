@@ -829,7 +829,54 @@ object Index {
     }
   }
 
-  /** Read side of a committed index. */
+  /** A term dictionary's (df, ttf) summed per term: the terms sorted on the
+    * driver, with parallel df and ttf arrays, searched by binary search.
+    */
+  private final class TermTable(terms: Array[String], df: Array[Long],
+      ttf: Array[Long]) {
+    /** (df, ttf) of `t`; (0, 0) when the dictionary lacks it. */
+    def apply(t: String): (Long, Long) = {
+      val i = terms.search(t).insertionPoint
+      if (i < terms.length && terms(i) == t) (df(i), ttf(i)) else (0L, 0L)
+    }
+
+    /** Summed ttf of the terms starting with `prefix`: a contiguous run of
+      * the sorted terms.
+      */
+    def ttfWithPrefix(prefix: String): Long = {
+      var i = terms.search(prefix).insertionPoint
+      var sum = 0L
+      while (i < terms.length && terms(i).startsWith(prefix)) { sum += ttf(i); i += 1 }
+      sum
+    }
+  }
+
+  private object TermTable {
+    /** Sorts (term, df, ttf) rows, one per term per snapshot, and sums each
+      * term's rows.
+      */
+    def apply(rows: Array[(String, Long, Long)]): TermTable = {
+      val sorted = rows.sortBy(_._1)
+      val terms = new Array[String](sorted.length)
+      val df = new Array[Long](sorted.length)
+      val ttf = new Array[Long](sorted.length)
+      var n = 0
+      sorted.foreach { case (t, d, f) =>
+        if (n == 0 || terms(n - 1) != t) { terms(n) = t; n += 1 }
+        df(n - 1) += d
+        ttf(n - 1) += f
+      }
+      new TermTable(terms.take(n), df.take(n), ttf.take(n))
+    }
+  }
+
+  /** Read side of a committed index, pinned to the snapshots committed when
+    * it was opened. Opening reads only the manifest. The term dictionary's
+    * statistics load once per reader, on the first stats lookup, and stay
+    * in driver heap: memory grows with the number of distinct terms, and
+    * no lookup after the load launches a Spark job. A commit after the open
+    * is seen only by a reader opened after it.
+    */
   final class Reader(val spark: SparkSession, val indexDir: String) {
     val snapshots: Seq[SnapshotMeta] = SnapshotStore.read(indexDir)
     require(snapshots.nonEmpty, s"no committed snapshots in $indexDir")
@@ -891,51 +938,34 @@ object Index {
     def termDict: DataFrame =
       spark.read.parquet(snapshots.map(_.termDictDir): _*)
 
-    private val termStatsCache =
-      new java.util.concurrent.ConcurrentHashMap[String, (Long, Long)]()
-
-    /** Global (df, ttf) per term (summed across salt slices + snapshots),
-      * cached per reader — Lucene's TermStatistics gathering at
-      * createWeight time (language-model similarities consume the ttf).
-      * Repeat queries over a reader skip the lookup job entirely; the cache
-      * dies with the reader, so NRT appends (which open a new reader)
-      * never serve stale stats. Unknown terms cache (0, 0).
+    /** The term dictionary's statistics in heap (Lucene's terms index): one
+      * shuffle-free scan of this reader's termdict on the first stats lookup,
+      * summed per term on the driver. Later lookups launch no Spark job. The
+      * explicit schema reads only the three columns and skips the
+      * schema-inference job, so the load is one job.
       */
-    def termStatsMap(terms: Seq[String]): Map[String, (Long, Long)] = {
-      import org.apache.spark.sql.functions.{col, sum}
+    private lazy val termTable: TermTable = {
       import spark.implicits._
-      val missing = terms.distinct.filterNot(termStatsCache.containsKey)
-      if (missing.nonEmpty) {
-        val fetched = termDict.where(col("term").isin(missing: _*))
-          .groupBy(col("term")).agg(sum(col("df")), sum(col("ttf")))
-          .as[(String, Long, Long)].collect()
-          .map(r => r._1 -> (r._2, r._3)).toMap
-        missing.foreach(t =>
-          termStatsCache.put(t, fetched.getOrElse(t, (0L, 0L))))
-      }
-      terms.map(t => t -> termStatsCache.get(t)).toMap
+      TermTable(spark.read.schema("term STRING, df BIGINT, ttf BIGINT")
+        .parquet(snapshots.map(_.termDictDir): _*).as[(String, Long, Long)].collect())
     }
 
-    /** df-only view of termStatsMap (back-compat convenience). */
-    def termDfs(terms: Seq[String]): Map[String, Long] =
-      termStatsMap(terms).map { case (t, (df, _)) => t -> df }
+    /** Global (df, ttf) per term, summed across salt slices and snapshots —
+      * Lucene's TermStatistics gathering at createWeight time (language-model
+      * similarities consume the ttf). Unknown terms give (0, 0).
+      */
+    def termStatsMap(terms: Seq[String]): Map[String, (Long, Long)] =
+      terms.map(t => t -> termTable(t)).toMap
 
-    private val fieldStatsCache =
-      new java.util.concurrent.ConcurrentHashMap[String, IndexStats]()
+    /** df-only view of termStatsMap. */
+    def termDfs(terms: Seq[String]): Map[String, Long] =
+      terms.map(t => t -> termTable(t)._1).toMap
 
     /** Collection stats of an extra analyzed field: docCount is global,
-      * sumTotalTermFreq aggregates the field's prefixed termdict rows
-      * (a prefix-pushdown scan of the slim table, cached per reader).
+      * sumTotalTermFreq sums the ttf of the field's prefixed terms.
       */
     def fieldStats(field: String): IndexStats =
-      fieldStatsCache.computeIfAbsent(field, f => {
-        import org.apache.spark.sql.functions.{coalesce, lit, sum}
-        val prefix = graft.index.FieldOf.prefixed(f, "")
-        val ttf = termDict
-          .where(org.apache.spark.sql.functions.col("term").startsWith(prefix))
-          .agg(coalesce(sum("ttf"), lit(0L))).head().getLong(0)
-        IndexStats(stats.docCount, ttf)
-      })
+      IndexStats(stats.docCount, termTable.ttfWithPrefix(FieldOf.prefixed(field, "")))
 
     /** Indexed infix-suggest table
       * [B lucene/suggest/src/java/org/apache/lucene/search/suggest/analyzing/AnalyzingInfixSuggester.java]:

@@ -2468,9 +2468,7 @@ object DocSearchOps {
       .where(col("doc_id") === seedDocId).select(col("text")).as[String].head()
     val seedTerms = graft.core.Analyzer.analyze(text).distinct
     val stats = r.stats
-    val dfMap = r.termDict.where(col("term").isin(seedTerms.toSeq: _*))
-      .groupBy(col("term")).agg(sum(col("df")).as("df"))
-      .as[(String, Long)].collect().toMap
+    val dfMap = r.termDfs(seedTerms.toSeq).filter(_._2 > 0)
     val bm = graft.core.Bm25()
     val topTerms = seedTerms
       .filter(dfMap.contains)

@@ -12,11 +12,6 @@ import org.apache.spark.sql.functions._
   */
 object TextOps {
 
-  /** Whether the most recent perplexity() call's bigram model hit its
-    * maxModel cap (no-silent-caps observability; also logged).
-    */
-  @volatile var lastPerplexityModelTruncated: Boolean = false
-
   private def docs(spark: SparkSession, sfDir: String): DataFrame =
     spark.read.parquet(s"$sfDir/documents.parquet")
 
@@ -143,8 +138,7 @@ object TextOps {
       .agg(count(lit(1)).as("cb"))
       .orderBy(desc("cb"), asc("w1"), asc("w2")).limit(maxModel + 1)
       .collect()
-    lastPerplexityModelTruncated = capped.length > maxModel
-    if (lastPerplexityModelTruncated)
+    if (capped.length > maxModel)
       println(s"[graft] perplexity: bigram LM truncated to $maxModel rows " +
         "(tail bigrams dropped; raise maxModel for full-vocabulary scoring)")
     val bgModel = capped.take(maxModel)

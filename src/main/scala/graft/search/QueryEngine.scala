@@ -279,8 +279,8 @@ object QueryEngine {
     if (allTerms.isEmpty) return spark.emptyDataset[ScoredDoc]
 
     // global per-term stats across salt slices + snapshots == Lucene's
-    // TermStatistics gathering at createWeight time — slim-termdict lookup,
-    // cached on the reader so repeat terms skip the job
+    // TermStatistics gathering at createWeight time — a heap lookup in the
+    // reader's term table (loaded once per reader), no Spark job
     val termStats: Map[String, (Long, Long)] = reader.termStatsMap(allTerms)
     val stats = reader.stats
     // per-field collection stats: extra analyzed fields score against their

@@ -633,6 +633,94 @@ class IndexEndToEndSpec extends AnyFunSuite {
     assert(hits.length == 1)
   }
 
+  /** Two snapshots (build, then appendBatch) with `repo` field terms, plus
+    * a reader opened between the two commits and never used before the
+    * append. Returns (indexDir, that reader, the appended docs' contents).
+    */
+  private lazy val twoSnapshotIndex: (String, Index.Reader, Seq[String]) = {
+    import spark.implicits._
+    val corpus = spark.read.parquet(s"$corpusDir/corpus.parquet").as[SourceDoc]
+    val cfg = IndexConfig(hotTermDf = 400, targetPostingsPerSlice = 300,
+      extraFields = Seq("repo"))
+    val dir = s"$workDir/index_term_stats"
+    val appended = pmod(crc32($"path"), lit(3)) === 0
+    Index.build(corpus.where(!appended), dir, cfg)
+    val opened = Index.reader(spark, dir)
+    val batch = corpus.where(appended)
+    Index.appendBatch(batch, dir, 1L, cfg)
+    (dir, opened, batch.map(_.content).collect().toSeq)
+  }
+
+  test("term stats: lookups run no Spark job and equal the termdict aggregate") {
+    import spark.implicits._
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val r = Index.reader(spark, twoSnapshotIndex._1)
+    assert(r.snapshots.size == 2)
+    // reference: the Spark aggregate the reader used to run per lookup
+    val ref = r.termDict.groupBy($"term").agg(sum($"df"), sum($"ttf"))
+      .as[(String, Long, Long)].collect().map(t => t._1 -> (t._2, t._3)).toMap
+    val inBoth = r.snapshots.map(s => spark.read.parquet(s.termDictDir)
+      .select($"term").as[String].collect().toSet).reduce(_ intersect _)
+    assert(inBoth.contains("return"))
+    val repoPrefix = FieldOf.prefixed("repo", "")
+    val repoTtf = ref.collect { case (t, (_, ttf)) if t.startsWith(repoPrefix) => ttf }.sum
+    assert(repoTtf > 0)
+
+    r.termStatsMap(Seq("while")) // warm-up: the one load per reader
+    val probe = "graft.test.termStatsProbe"
+    val jobs = new java.util.concurrent.LinkedBlockingQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty(probe)))
+          .foreach(jobs.put)
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    val (got, repoStats) = try {
+      sc.setLocalProperty(probe, "lookup")
+      val got = r.termStatsMap(ref.keys.toSeq :+ "zzznotaterm")
+      val repoStats = r.fieldStats("repo")
+      // a fence job: the listener bus delivers job starts in order, so
+      // every lookup job has been seen once the fence has
+      sc.setLocalProperty(probe, "fence")
+      sc.parallelize(Seq(1), 1).count()
+      var seen = List.empty[String]
+      var tag = jobs.poll(60, java.util.concurrent.TimeUnit.SECONDS)
+      while (tag != "fence") {
+        assert(tag != null, "listener never saw the fence job")
+        seen ::= tag
+        tag = jobs.poll(60, java.util.concurrent.TimeUnit.SECONDS)
+      }
+      assert(seen.isEmpty, s"${seen.size} Spark job(s) ran for warm term-stats lookups")
+      (got, repoStats)
+    } finally {
+      sc.setLocalProperty(probe, null)
+      sc.removeSparkListener(listener)
+    }
+
+    // every dictionary term (`return` in both snapshots, the repo-prefixed
+    // terms) plus an unknown one at (0, 0)
+    assert(got == ref + ("zzznotaterm" -> ((0L, 0L))))
+    assert(repoStats == IndexStats(r.stats.docCount, repoTtf))
+  }
+
+  test("term stats: a reader sees the snapshots committed when it was opened") {
+    val (dir, opened, appended) = twoSnapshotIndex
+    val terms = Seq("return", "while")
+    val batchDf = terms.map(t =>
+      t -> appended.count(c => Analyzer.analyze(c).contains(t)).toLong).toMap
+    assert(batchDf.values.forall(_ > 0))
+    val base = Index.reader(spark, dir).snapshots.head
+    assert(opened.snapshots == Seq(base))
+    assert(opened.stats.docCount == base.docCount)
+    // first lookup on `opened` comes after the append: its table must
+    // still hold only the base snapshot's counts
+    val before = opened.termDfs(terms)
+    val after = Index.reader(spark, dir)
+    assert(after.stats.docCount == base.docCount + appended.size)
+    assert(after.termDfs(terms) == terms.map(t => t -> (before(t) + batchDf(t))).toMap)
+  }
+
   test("skew: salted merge splits hot terms, bounded slices, correct union") {
     import spark.implicits._
     // every doc contains `return` (Keywords pool) -> df == NumDocs > hotTermDf
